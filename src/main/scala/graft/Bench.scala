@@ -161,7 +161,11 @@ object Bench {
       s""""control_ok":$controlOk,"control_retries":$blockRetries,""" +
       s""""query_control":$queryControlJson,""" +
       s""""native_expected_sec":$expectedNative,""" +
-      s""""native_scan_sec":$native,"g01_vs_native":$ratio,"sf":"$sfDir"}"""
+      s""""native_scan_sec":$native,"g01_vs_native":$ratio,"sf":"$sfDir",""" +
+      // provenance: BENCH_LAST.json is overwritten by every run, so the
+      // line itself says how many cores produced it, and when
+      s""""cpus":${cpus.toIntOption.getOrElse("\"" + cpus + "\"")},""" +
+      s""""timestamp":"${java.time.Instant.now()}"}"""
     println(metricsLine)
     // r19 (r18 verdict item 2): the driver's parser failed to extract the
     // line from sbt's [info]-decorated stdout EVERY round (BENCH_r*.json

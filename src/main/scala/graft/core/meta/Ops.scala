@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import graft.core.expr._
 import graft.core.types._
@@ -391,8 +392,11 @@ final class StagedOps(val real: TableOps, initial: TableMetadata) extends TableO
   /** Best-effort removal of files written while staging: added data files,
     * manifests, and manifest lists of staged snapshots. Never throws — an
     * abort must always leave the real table pointer untouched, and any
-    * stragglers are ordinary orphans for remove_orphan_files. */
-  def cleanupStagedFiles(): Unit = {
+    * stragglers are ordinary orphans for remove_orphan_files. Fails
+    * closed: when the keep-set of the initial table cannot be read in
+    * full, nothing is deleted, the reason goes to stderr, and the result
+    * is false. */
+  def cleanupStagedFiles(): Boolean = {
     // Artifacts of the INITIAL (real) table must survive an abort: a
     // staged append's manifest list embeds the parent snapshot's
     // manifests, and a staged commit may reference pre-existing external
@@ -400,9 +404,18 @@ final class StagedOps(val real: TableOps, initial: TableMetadata) extends TableO
     // parquet). Only what the staging itself created is deleted —
     // manifests not reachable from the initial metadata, and added data
     // files under this table's own data/ directory.
-    val keepManifests: Set[String] = initial.snapshots.flatMap(s =>
-      try ManifestIO.readList(s.manifestListPath).map(_.path)
-      catch { case _: Throwable => Nil }).toSet
+    val keepManifests: Set[String] =
+      try initial.snapshots.flatMap(s =>
+        ManifestIO.readList(s.manifestListPath).map(_.path)).toSet
+      catch {
+        case NonFatal(e) =>
+          // a manifest the live table still references would be missing
+          // from the keep-set, and its data files deleted with it
+          System.err.println(s"graft: staged-file cleanup skipped for $location, " +
+            s"a live manifest list is unreadable ($e); staged files are left " +
+            "for remove_orphan_files")
+          return false
+      }
     val dataPrefix = location.stripSuffix("/") + "/data/"
     stagedSnapshots.foreach { s =>
       try {
@@ -418,6 +431,7 @@ final class StagedOps(val real: TableOps, initial: TableMetadata) extends TableO
         GraftIO.delete(s.manifestListPath)
       } catch { case _: Throwable => () }
     }
+    true
   }
 }
 

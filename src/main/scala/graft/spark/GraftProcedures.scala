@@ -2462,14 +2462,9 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
           (if (v3) Seq(GField(13, "dv_count", GInt, required = true)) else Nil))
         val sparkSchema = SparkTypes.toSparkStruct(statsStruct)
         val spark = SparkSession.active
-        val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-        conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-        val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
-        val owf = new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetFileFormat().prepareWrite(spark, job,
-            Map("compression" -> "snappy"), sparkSchema)
-        job.getConfiguration
-          .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
+        val job = org.apache.hadoop.mapreduce.Job.getInstance(
+          spark.sessionState.newHadoopConfWithOptions(Map.empty))
+        val (owf, _) = ParquetWriteSetup.prepare(spark, job, "snappy", sparkSchema)
         val p = s"${t.location}/metadata/partition-stats-${sn.snapshotId}-" +
           s"${java.util.UUID.randomUUID}.parquet"
         val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(

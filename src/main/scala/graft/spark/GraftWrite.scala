@@ -314,143 +314,14 @@ final class GraftBatchWrite(table: GTable, writeSchema: StructType, mode: WriteM
     codecLevel: Option[String] = None)
   extends BatchWrite {
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     // copy-on-write rewrites materialize row lineage: the written files
     // carry _row_id/_last_updated_sequence_number columns under the
     // reserved field ids, filled from Spark's metadata projection
-    val isCow = mode.isInstanceOf[CopyOnWriteMode]
-    // read-side shredding: materialize each configured variant sub-path
-    // as a typed file column (reserved id) after the data (+lineage)
-    // fields — readers serve variant_get from it without touching the
-    // binary (reference variant-shredding spec typed_value columns)
-    val shredSpecs = GraftSparkTable
-      .shredSpecsOf(table.meta.properties, table.schema)
-      .filter(sp => writeSchema.fieldNames.contains(sp.parent))
-    val lineageFields =
-      if (isCow) GraftSparkTable.lineageReadFields else Nil
-    val lineageG =
-      if (isCow) GraftSparkTable.lineageGFields else Nil
-    val fileSchema = StructType(writeSchema.fields ++ lineageFields ++
-      shredSpecs.map(GraftSparkTable.shredMatField))
-    // by-name (accept-any-schema / merge-schema) writes arrive in the
-    // dataset's shape: the file's graft schema follows the dataset, with
-    // the table's field ids (identity for exact-shape writers)
-    val baseG: GSchema = if (fileGBase == null) table.schema else fileGBase
-    val fileGSchema =
-      if (isCow || shredSpecs.nonEmpty || (baseG ne table.schema))
-        baseG.copy(struct = graft.core.types.GStruct(
-          baseG.fields ++ lineageG ++
-            shredSpecs.map(GraftSparkTable.shredMatGField)))
-      else table.schema
-    // prepareWrite wires ParquetWriteSupport (schema, field ids, codec)
-    // into the job conf; the OutputWriterFactory is serializable.
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    table.meta.properties.get("write.target-file-rows")
-      .foreach(conf.set("graft.write.target-file-rows", _))
-    GraftParquetCrypto.configure(conf, table.meta)
-    val job = Job.getInstance(conf)
-    // data file format: per-write `write-format` option (reference
-    // SparkWriteOptions.WRITE_FORMAT), else write.format.default
-    // (reference TableProperties DEFAULT_FILE_FORMAT; parquet default,
-    // orc supported — avro has no Spark SQL connector on this classpath)
-    val dataFormat = formatOverride.getOrElse(table.meta.properties
-      .getOrElse("write.format.default", "parquet").toLowerCase)
-    // only parquet has native modular encryption on this engine (the
-    // reference's avro-data path uses AES GCM streams; orc native
-    // encryption is unwired there too) — refuse rather than silently
-    // writing plaintext data into an encrypted table
-    if (GraftParquetCrypto.isEncrypted(table.meta) && dataFormat != "parquet")
-      throw new UnsupportedOperationException(
-        s"encrypted tables require the parquet write format, got $dataFormat")
-    val owf = dataFormat match {
-      case "avro" =>
-        new GraftAvro.AvroWriterFactory(
-          graft.core.meta.MetaJson.writeSchema(fileGSchema).toString,
-          codecOverride.getOrElse(table.meta.properties
-            .getOrElse("write.avro.compression-codec", "snappy")))
-      case "orc" =>
-        // bloom filters (reference TableProperties ORC_BLOOM_FILTER_*):
-        // ride the job conf; Spark's OrcOutputWriter builds its writer
-        // options from the hadoop conf, so orc.* keys pass through
-        table.meta.properties.get("write.orc.bloom.filter.columns")
-          .foreach(job.getConfiguration.set("orc.bloom.filter.columns", _))
-        table.meta.properties.get("write.orc.bloom.filter.fpp")
-          .foreach(job.getConfiguration.set("orc.bloom.filter.fpp", _))
-        // stripe size (reference TableProperties ORC_STRIPE_SIZE_BYTES):
-        // the ORC analog of the parquet row-group size — stripes are the
-        // split/stride unit for offsets-aware task splitting
-        table.meta.properties.get("write.orc.stripe-size-bytes")
-          .foreach(job.getConfiguration.set("orc.stripe.size", _))
-        new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
-          .prepareWrite(spark, job,
-            Map("compression" -> codecOverride.getOrElse(
-              spark.sessionState.conf
-                .getConfString("spark.sql.orc.compression.codec", "snappy"))),
-            fileSchema)
-      case _ =>
-        // table-level parquet tuning (reference TableProperties):
-        // write.parquet.compression-codec, row-group size, bloom filters
-        val props = table.meta.properties
-        // per-write compression-codec / compression-level options
-        // (reference SparkWriteOptions) beat the table properties
-        val codec = codecOverride.getOrElse(
-          props.getOrElse("write.parquet.compression-codec",
-            spark.sessionState.conf
-              .getConfString("spark.sql.parquet.compression.codec", "snappy")))
-        codecLevel.orElse(props.get("write.parquet.compression-level")).foreach { lvl =>
-          job.getConfiguration.set("parquet.compression.codec.zstd.level", lvl)
-          job.getConfiguration.set("compression.level", lvl)
-        }
-        props.get("write.parquet.row-group-size-bytes")
-          .foreach(job.getConfiguration.set("parquet.block.size", _))
-        props.get("write.parquet.page-size-bytes")
-          .foreach(job.getConfiguration.set("parquet.page.size", _))
-        // bloom filters (reference TableProperties PARQUET_BLOOM_FILTER_*
-        // → parquet-mr per-column '#col' conf keys): point-lookup row-group
-        // pruning at scale for high-NDV id columns dictionaries can't cover
-        props.collect {
-          case (k, v) if k.startsWith("write.parquet.bloom-filter-enabled.column.") =>
-            job.getConfiguration.set("parquet.bloom.filter.enabled#" +
-              k.stripPrefix("write.parquet.bloom-filter-enabled.column."), v)
-          case (k, v) if k.startsWith("write.parquet.bloom-filter-fpp.column.") =>
-            job.getConfiguration.set("parquet.bloom.filter.fpp#" +
-              k.stripPrefix("write.parquet.bloom-filter-fpp.column."), v)
-          case (k, v) if k.startsWith("write.parquet.bloom-filter-ndv.column.") =>
-            job.getConfiguration.set("parquet.bloom.filter.expected.ndv#" +
-              k.stripPrefix("write.parquet.bloom-filter-ndv.column."), v)
-          case (k, v) if k == "write.parquet.bloom-filter-max-bytes" =>
-            job.getConfiguration.set("parquet.bloom.filter.max.bytes", v)
-          case (k, v) if k == "write.parquet.bloom-filter-adaptive-enabled" =>
-            job.getConfiguration.set("parquet.bloom.filter.adaptive.enabled", v)
-        }
-        val w = new ParquetFileFormat().prepareWrite(spark, job,
-          Map("compression" -> codec), fileSchema)
-        // prepareWrite copies the SESSION field-id flag over ours —
-        // graft files must ALWAYS carry field ids, whatever the session
-        job.getConfiguration
-          .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-        // timestamps as INT64 micros, never INT96 (format spec
-        // "Parquet: timestamp/timestamptz as int64 micros"; Spark's
-        // session default can still be legacy INT96, which also carries
-        // NO footer min/max — killing bound pruning and readable_metrics
-        // on every timestamp column)
-        job.getConfiguration.set(
-          "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        w
-    }
-    val confMap = job.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    val metaJson = graft.core.meta.MetaJson
-    new GraftWriterFactory(
-      table.location,
-      fileSchema.json,
-      metaJson.writeSchema(fileGSchema).toString,
-      metaJson.writeSpec(table.spec).toString,
-      owf, confMap, dataFormat, lineage = isCow, shredSpecs = shredSpecs,
-      sortOrderId = stampSortOrderId)
-  }
+    GraftWriterFactory.forTable(table, writeSchema,
+      if (fileGBase == null) table.schema else fileGBase,
+      lineage = mode.isInstanceOf[CopyOnWriteMode], sortOrderId = stampSortOrderId,
+      formatOverride, codecOverride, codecLevel)
 
   /** sort_order_id stamped on written data files (reference
     * SparkFileWriterFactory dataSortOrderId): only when the table's
@@ -510,63 +381,31 @@ final case class GraftCommitMessage(files: Seq[DataFile]) extends WriterCommitMe
 object GraftUpsertWriterFactory {
   def create(table: GTable, writeSchema: StructType,
       inner: DataWriterFactory): GraftUpsertWriterFactory = {
-    val spark = SparkSession.active
-    val eqIds = table.schema.identifierFieldIds.toSeq.sorted
-    val eqFields = eqIds.map(id => table.schema.fields.find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"identifier field $id not in schema")))
-    // identifier sub-schema WITH parquet field ids so full-schema
-    // field-id reads bind the key columns (absent columns read null)
-    val eqStruct = SparkTypes.toSparkStruct(graft.core.types.GStruct(eqFields))
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    GraftParquetCrypto.configure(conf, table.meta)
-    val job = Job.getInstance(conf)
-    val owf = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "snappy"), eqStruct)
-    // re-force after prepareWrite (it copies the session flag)
-    job.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val confMap = job.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new GraftUpsertWriterFactory(inner, table.location, eqStruct.json,
-      confMap, eqFields.map(f => writeSchema.fieldIndex(f.name)).toArray,
-      eqIds.toArray, owf,
-      // eq deletes can't be DVs; only 'avro' switches the file format
-      if (table.meta.properties.get("write.delete.format").contains("avro")) "avro"
-      else "parquet")
+    val eqDeletes = EqDeleteFiles.setup(table)
+    new GraftUpsertWriterFactory(inner, table.location, eqDeletes,
+      eqDeletes.eqSchema.fieldNames.map(writeSchema.fieldIndex))
   }
 }
 
 final class GraftUpsertWriterFactory(
     inner: DataWriterFactory,
     location: String,
-    eqSchemaJson: String,
-    confMap: Map[String, String],
-    keyPos: Array[Int],
-    eqIds: Array[Int],
-    owf: OutputWriterFactory,
-    deleteFormat: String = "parquet") extends DataWriterFactory {
+    eqDeletes: EqDeleteSetup,
+    keyPos: Array[Int]) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftUpsertWriter(inner.createWriter(partitionId, taskId),
-      location, eqSchemaJson, confMap, keyPos, eqIds, owf, partitionId, taskId,
-      deleteFormat)
+      location, eqDeletes, keyPos, partitionId, taskId)
 }
 
 final class GraftUpsertWriter(
     inner: DataWriter[InternalRow],
     location: String,
-    eqSchemaJson: String,
-    confMap: Map[String, String],
+    eqDeletes: EqDeleteSetup,
     keyPos: Array[Int],
-    eqIds: Array[Int],
-    owf: OutputWriterFactory,
     partitionId: Int,
-    taskId: Long,
-    deleteFormat: String = "parquet") extends DataWriter[InternalRow] {
+    taskId: Long) extends DataWriter[InternalRow] {
 
-  private val eqSchema = org.apache.spark.sql.types.DataType.fromJson(eqSchemaJson)
-    .asInstanceOf[StructType]
   // last row per key, insertion-ordered: the epoch's equality-delete file
   // shares its sequence number with the data files (eq deletes apply only
   // to LOWER sequences), so same-epoch duplicates must be resolved
@@ -574,7 +413,7 @@ final class GraftUpsertWriter(
   private val byKey = mutable.LinkedHashMap.empty[Seq[Any], InternalRow]
 
   override def write(row: InternalRow): Unit = {
-    val key = keyPos.zip(eqSchema.fields).map { case (p, f) =>
+    val key = keyPos.zip(eqDeletes.eqSchema.fields).map { case (p, f) =>
       SparkBridge.valueAt(row, p, f.dataType)
     }.toSeq
     byKey.put(key, row.copy())
@@ -585,15 +424,24 @@ final class GraftUpsertWriter(
     val keys = byKey.keys
     val dataMsg = inner.commit().asInstanceOf[GraftCommitMessage]
     if (keys.isEmpty) return GraftDeltaCommitMessage(dataMsg.files, Nil)
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val eqFile = EqDeleteFiles.write(location, eqSchema, eqIds, 0, Nil,
-      keys, owf, conf, partitionId, taskId, deleteFormat)
+    val eqFile = EqDeleteFiles.write(location, eqDeletes, 0, Nil, keys, partitionId, taskId)
     GraftDeltaCommitMessage(dataMsg.files, Seq(eqFile))
   }
 
   override def abort(): Unit = inner.abort()
   override def close(): Unit = inner.close()
+}
+
+/** Equality-delete writer setup over a table's identifier fields,
+  * serializable for executors. `format` is parquet or avro: equality
+  * deletes can't be DVs, so only write.delete.format=avro switches it. */
+final case class EqDeleteSetup(eqSchema: StructType, eqIds: Array[Int],
+    owf: OutputWriterFactory, confMap: Map[String, String], format: String) {
+  @transient lazy val conf: Configuration = {
+    val c = new Configuration(false)
+    confMap.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
 }
 
 /** Writes one equality-delete parquet file: rows are identifier-key
@@ -602,10 +450,24 @@ final class GraftUpsertWriter(
   * writer (global scope) and the SQL DELETE equality path
   * (partition-scoped). */
 object EqDeleteFiles {
-  def write(location: String, eqSchema: StructType, eqIds: Array[Int],
-      specId: Int, partition: Seq[Any], keys: Iterable[Seq[Any]],
-      owf: OutputWriterFactory, conf: Configuration,
-      partitionId: Int, taskId: Long, format: String = "parquet"): DataFile = {
+  def setup(table: GTable): EqDeleteSetup = {
+    val eqIds = table.schema.identifierFieldIds.toSeq.sorted
+    val eqFields = eqIds.map(id => table.schema.fields.find(_.id == id).getOrElse(
+      throw new IllegalArgumentException(s"identifier field $id not in schema")))
+    // identifier sub-schema WITH parquet field ids so full-schema
+    // field-id reads bind the key columns (absent columns read null)
+    val eqStruct = SparkTypes.toSparkStruct(graft.core.types.GStruct(eqFields))
+    val job = ParquetWriteSetup.newJob(table.meta)
+    val (owf, confMap) = ParquetWriteSetup.prepare(SparkSession.active, job,
+      ParquetWriteSetup.codec(job, table.meta.properties), eqStruct)
+    EqDeleteSetup(eqStruct, eqIds.toArray, owf, confMap,
+      if (table.meta.properties.get("write.delete.format").contains("avro")) "avro"
+      else "parquet")
+  }
+
+  def write(location: String, eqDeletes: EqDeleteSetup, specId: Int, partition: Seq[Any],
+      keys: Iterable[Seq[Any]], partitionId: Int, taskId: Long): DataFile = {
+    val EqDeleteSetup(eqSchema, eqIds, owf, _, format) = eqDeletes
     val dir = s"$location/data"
     java.nio.file.Files.createDirectories(GraftIO.toPath(dir))
     val ext = if (format == "avro") "avro" else "parquet"
@@ -629,7 +491,7 @@ object EqDeleteFiles {
         }.toSeq))
       GraftAvro.writeFile(path, eqSchema, gEq, keys.iterator.map(fill))
     } else {
-      val ctx = new TaskAttemptContextImpl(conf,
+      val ctx = new TaskAttemptContextImpl(eqDeletes.conf,
         new TaskAttemptID(new TaskID("graft-eq", partitionId, TaskType.MAP, taskId.toInt), 0))
       val w = owf.newInstance(path, eqSchema, ctx)
       keys.foreach(k => w.write(fill(k)))
@@ -671,6 +533,164 @@ object EqDeleteFiles {
   }
 }
 
+/** The one parquet writer configuration: data, position-delete,
+  * equality-delete and partition-stats files all go through `prepare`. */
+object ParquetWriteSetup {
+  /** job over the session's hadoop conf, carrying the table's parquet
+    * modular-encryption keys when it has any */
+  def newJob(meta: TableMetadata): Job = {
+    val conf = SparkSession.active.sessionState.newHadoopConfWithOptions(Map.empty)
+    GraftParquetCrypto.configure(conf, meta)
+    Job.getInstance(conf)
+  }
+
+  /** compression codec of a table's parquet files: the per-write
+    * `compression-codec` option (reference SparkWriteOptions) beats
+    * write.parquet.compression-codec, which beats the session codec; a
+    * compression level resolves the same way and rides the job conf */
+  def codec(job: Job, props: Map[String, String],
+      codecOverride: Option[String] = None,
+      levelOverride: Option[String] = None): String = {
+    levelOverride.orElse(props.get("write.parquet.compression-level")).foreach { lvl =>
+      job.getConfiguration.set("parquet.compression.codec.zstd.level", lvl)
+      job.getConfiguration.set("compression.level", lvl)
+    }
+    codecOverride.getOrElse(props.getOrElse("write.parquet.compression-codec",
+      SparkSession.active.sessionState.conf
+        .getConfString("spark.sql.parquet.compression.codec", "snappy")))
+  }
+
+  /** prepareWrite wires ParquetWriteSupport (schema, codec) into the job
+    * conf; the returned OutputWriterFactory and conf snapshot are
+    * serializable for executors. */
+  def prepare(spark: SparkSession, job: Job, codec: String,
+      schema: StructType): (OutputWriterFactory, Map[String, String]) = {
+    val owf = new ParquetFileFormat().prepareWrite(spark, job,
+      Map("compression" -> codec), schema)
+    // prepareWrite copies the SESSION field-id flag over ours — graft
+    // files must ALWAYS carry field ids, whatever the session
+    job.getConfiguration.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
+    // timestamps as INT64 micros, never INT96 (format spec "Parquet:
+    // timestamp/timestamptz as int64 micros"; Spark's session default can
+    // still be legacy INT96, which also carries NO footer min/max —
+    // killing bound pruning and readable_metrics on every timestamp column)
+    job.getConfiguration.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    (owf, confMap(job))
+  }
+
+  def confMap(job: Job): Map[String, String] =
+    job.getConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+}
+
+/** The one data-file writer setup (reference SparkFileWriterFactory,
+  * shared by SparkWrite and SparkPositionDeltaWrite): append, overwrite,
+  * copy-on-write, streaming and the new rows of merge-on-read and
+  * equality-delta UPDATE/MERGE all configure their files here, so every
+  * table write property applies to every write path alike. */
+object GraftWriterFactory {
+  /** `writeSchema`/`fileG`: the incoming data rows (dataset shape, table
+    * field ids); `lineage` appends the _row_id/_last_updated_sequence_number
+    * columns row-level writes materialize; `sortOrderId` is stamped on
+    * every written file. */
+  def forTable(table: GTable, writeSchema: StructType, fileG: GSchema,
+      lineage: Boolean, sortOrderId: Option[Int],
+      formatOverride: Option[String] = None,
+      codecOverride: Option[String] = None,
+      codecLevel: Option[String] = None): GraftWriterFactory = {
+    val spark = SparkSession.active
+    val props = table.meta.properties
+    // read-side shredding: materialize each configured variant sub-path
+    // as a typed file column (reserved id) after the data (+lineage)
+    // fields — readers serve variant_get from it without touching the
+    // binary (reference variant-shredding spec typed_value columns)
+    val shredSpecs = GraftSparkTable.shredSpecsOf(props, table.schema)
+      .filter(sp => writeSchema.fieldNames.contains(sp.parent))
+    val fileSchema = StructType(writeSchema.fields ++
+      (if (lineage) GraftSparkTable.lineageReadFields else Nil) ++
+      shredSpecs.map(GraftSparkTable.shredMatField))
+    // by-name (accept-any-schema / merge-schema) writes arrive in the
+    // dataset's shape: the file's graft schema follows the dataset, with
+    // the table's field ids (identity for exact-shape writers)
+    val fileGSchema =
+      if (lineage || shredSpecs.nonEmpty || (fileG ne table.schema))
+        fileG.copy(struct = graft.core.types.GStruct(fileG.fields ++
+          (if (lineage) GraftSparkTable.lineageGFields else Nil) ++
+          shredSpecs.map(GraftSparkTable.shredMatGField)))
+      else table.schema
+    val job = ParquetWriteSetup.newJob(table.meta)
+    props.get("write.target-file-rows")
+      .foreach(job.getConfiguration.set("graft.write.target-file-rows", _))
+    // data file format: per-write `write-format` option (reference
+    // SparkWriteOptions.WRITE_FORMAT), else write.format.default
+    // (reference TableProperties DEFAULT_FILE_FORMAT; parquet default,
+    // orc supported — avro has no Spark SQL connector on this classpath)
+    val dataFormat = formatOverride.getOrElse(
+      props.getOrElse("write.format.default", "parquet").toLowerCase)
+    // only parquet has native modular encryption on this engine (the
+    // reference's avro-data path uses AES GCM streams; orc native
+    // encryption is unwired there too) — refuse rather than silently
+    // writing plaintext data into an encrypted table
+    if (GraftParquetCrypto.isEncrypted(table.meta) && dataFormat != "parquet")
+      throw new UnsupportedOperationException(
+        s"encrypted tables require the parquet write format, got $dataFormat")
+    val (owf, confMap) = dataFormat match {
+      case "avro" =>
+        (new GraftAvro.AvroWriterFactory(MetaJson.writeSchema(fileGSchema).toString,
+          codecOverride.getOrElse(props.getOrElse("write.avro.compression-codec", "snappy"))),
+          ParquetWriteSetup.confMap(job))
+      case "orc" =>
+        // bloom filters (reference TableProperties ORC_BLOOM_FILTER_*):
+        // ride the job conf; Spark's OrcOutputWriter builds its writer
+        // options from the hadoop conf, so orc.* keys pass through
+        props.get("write.orc.bloom.filter.columns")
+          .foreach(job.getConfiguration.set("orc.bloom.filter.columns", _))
+        props.get("write.orc.bloom.filter.fpp")
+          .foreach(job.getConfiguration.set("orc.bloom.filter.fpp", _))
+        // stripe size (reference TableProperties ORC_STRIPE_SIZE_BYTES):
+        // the ORC analog of the parquet row-group size — stripes are the
+        // split/stride unit for offsets-aware task splitting
+        props.get("write.orc.stripe-size-bytes")
+          .foreach(job.getConfiguration.set("orc.stripe.size", _))
+        (new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
+          .prepareWrite(spark, job,
+            Map("compression" -> codecOverride.getOrElse(spark.sessionState.conf
+              .getConfString("spark.sql.orc.compression.codec", "snappy"))),
+            fileSchema),
+          ParquetWriteSetup.confMap(job))
+      case _ =>
+        // table-level parquet tuning (reference TableProperties):
+        // row-group size, page size, bloom filters
+        props.get("write.parquet.row-group-size-bytes")
+          .foreach(job.getConfiguration.set("parquet.block.size", _))
+        props.get("write.parquet.page-size-bytes")
+          .foreach(job.getConfiguration.set("parquet.page.size", _))
+        // bloom filters (reference TableProperties PARQUET_BLOOM_FILTER_*
+        // → parquet-mr per-column '#col' conf keys): point-lookup row-group
+        // pruning at scale for high-NDV id columns dictionaries can't cover
+        props.collect {
+          case (k, v) if k.startsWith("write.parquet.bloom-filter-enabled.column.") =>
+            job.getConfiguration.set("parquet.bloom.filter.enabled#" +
+              k.stripPrefix("write.parquet.bloom-filter-enabled.column."), v)
+          case (k, v) if k.startsWith("write.parquet.bloom-filter-fpp.column.") =>
+            job.getConfiguration.set("parquet.bloom.filter.fpp#" +
+              k.stripPrefix("write.parquet.bloom-filter-fpp.column."), v)
+          case (k, v) if k.startsWith("write.parquet.bloom-filter-ndv.column.") =>
+            job.getConfiguration.set("parquet.bloom.filter.expected.ndv#" +
+              k.stripPrefix("write.parquet.bloom-filter-ndv.column."), v)
+          case (k, v) if k == "write.parquet.bloom-filter-max-bytes" =>
+            job.getConfiguration.set("parquet.bloom.filter.max.bytes", v)
+          case (k, v) if k == "write.parquet.bloom-filter-adaptive-enabled" =>
+            job.getConfiguration.set("parquet.bloom.filter.adaptive.enabled", v)
+        }
+        ParquetWriteSetup.prepare(spark, job,
+          ParquetWriteSetup.codec(job, props, codecOverride, codecLevel), fileSchema)
+    }
+    new GraftWriterFactory(table.location, fileSchema.json,
+      MetaJson.writeSchema(fileGSchema).toString, MetaJson.writeSpec(table.spec).toString,
+      owf, confMap, dataFormat, lineage, shredSpecs, sortOrderId)
+  }
+}
+
 final class GraftWriterFactory(
     location: String,
     writeSchemaJson: String,
@@ -683,7 +703,7 @@ final class GraftWriterFactory(
     shredSpecs: Seq[GraftSparkTable.ShredSpec] = Nil,
     sortOrderId: Option[Int] = None) extends DataWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
+  override def createWriter(partitionId: Int, taskId: Long): GraftFanoutWriter = {
     val writeSchema = org.apache.spark.sql.types.DataType.fromJson(writeSchemaJson)
       .asInstanceOf[StructType]
     val gSchema = MetaJson.readSchema(MetaJson.mapper.readTree(gSchemaJson))
@@ -1008,40 +1028,12 @@ final class GraftDeltaBatchWrite(table: GTable, branchPin: Option[String] = None
   extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = SparkSession.active
-    // replacement rows materialize lineage (UPDATE keeps _row_id; the
-    // nulled last-updated seq falls back to the new commit's sequence)
-    val writeSchema = StructType(SparkTypes.toSparkSchema(table.schema).fields ++
-      GraftSparkTable.lineageReadFields)
-    val gSchemaForFile = table.schema.copy(struct = graft.core.types.GStruct(
-      table.schema.fields ++ GraftSparkTable.lineageGFields))
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    GraftParquetCrypto.configure(conf, table.meta)
-    val codec = Map("compression" -> spark.sessionState.conf
-      .getConfString("spark.sql.parquet.compression.codec", "snappy"))
-    val dataJob = Job.getInstance(conf)
-    table.meta.properties.get("write.target-file-rows")
-      .foreach(dataJob.getConfiguration.set("graft.write.target-file-rows", _))
-    val dataOwf = new ParquetFileFormat().prepareWrite(spark, dataJob, codec, writeSchema)
-    dataJob.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val delJob = Job.getInstance(conf)
-    val delOwf = new ParquetFileFormat()
-      .prepareWrite(spark, delJob, codec, GraftDeltaWriter.DeleteSchema)
-    delJob.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val confMap = dataJob.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    // the delete writer needs the conf prepareWrite populated with the
-    // DELETE schema, not the data schema
-    val delConfMap = delJob.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new GraftDeltaWriterFactory(
-      table.location, writeSchema.json,
-      MetaJson.writeSchema(gSchemaForFile).toString,
-      MetaJson.writeSpec(table.spec).toString,
-      dataOwf, delOwf, confMap, delConfMap,
+    val delJob = ParquetWriteSetup.newJob(table.meta)
+    val (delOwf, delConfMap) = ParquetWriteSetup.prepare(SparkSession.active, delJob,
+      ParquetWriteSetup.codec(delJob, table.meta.properties), GraftDeltaWriter.DeleteSchema)
+    new GraftDeltaWriterFactory(table.location, table.spec.specId,
+      GraftDeltaWriter.partitionTypes(table), GraftDeltaWriter.newRows(table),
+      delOwf, delConfMap,
       // v3+ tables default to deletion vectors (reference v3: DVs replace
       // position-delete files); explicit write.delete.format still wins
       table.meta.properties.getOrElse("write.delete.format",
@@ -1081,12 +1073,10 @@ final case class GraftDeltaCommitMessage(dataFiles: Seq[DataFile],
 
 final class GraftDeltaWriterFactory(
     location: String,
-    writeSchemaJson: String,
-    gSchemaJson: String,
-    specJson: String,
-    dataOwf: OutputWriterFactory,
+    specId: Int,
+    partSparkTypes: Array[org.apache.spark.sql.types.DataType],
+    dataFactory: GraftWriterFactory,
     delOwf: OutputWriterFactory,
-    confMap: Map[String, String],
     delConfMap: Map[String, String],
     deleteFormat: String = "parquet",
     deleteGranularity: String = "partition",
@@ -1095,24 +1085,28 @@ final class GraftDeltaWriterFactory(
     crypto: Option[graft.core.meta.TableCrypto] = None) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val writeSchema = org.apache.spark.sql.types.DataType.fromJson(writeSchemaJson)
-      .asInstanceOf[StructType]
-    val gSchema = MetaJson.readSchema(MetaJson.mapper.readTree(gSchemaJson))
-    val spec = MetaJson.readSpec(MetaJson.mapper.readTree(specJson))
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val dataWriter = new GraftFanoutWriter(location, writeSchema, gSchema, spec,
-      dataOwf, conf, partitionId, taskId, lineage = true)
     val delConf = new Configuration(false)
     delConfMap.foreach { case (k, v) => delConf.set(k, v) }
-    new GraftDeltaWriter(location, spec.specId,
-      spec.partitionType(gSchema).fields.map(f => SparkTypes.toSpark(f.tpe)).toArray,
-      dataWriter, delOwf, delConf, partitionId, taskId, deleteFormat,
-      deleteGranularity, crypto)
+    new GraftDeltaWriter(location, specId, partSparkTypes,
+      dataFactory.createWriter(partitionId, taskId), delOwf, delConf,
+      partitionId, taskId, deleteFormat, deleteGranularity, crypto)
   }
 }
 
 object GraftDeltaWriter {
+  /** writer setup for the new rows of a delta write (UPDATE replacements,
+    * MERGE inserts): the table's data-file setup with lineage, so
+    * replacements keep their _row_id (the nulled last-updated seq falls
+    * back to the new commit's sequence). Delta writes order rows by
+    * (_file, _pos), not the table's sort order: no sort_order_id stamp. */
+  def newRows(table: GTable): GraftWriterFactory =
+    GraftWriterFactory.forTable(table, SparkTypes.toSparkSchema(table.schema),
+      table.schema, lineage = true, sortOrderId = None)
+
+  /** Spark types of the current spec's partition tuple */
+  def partitionTypes(table: GTable): Array[org.apache.spark.sql.types.DataType] =
+    table.spec.partitionType(table.schema).fields.map(f => SparkTypes.toSpark(f.tpe)).toArray
+
   /** position-delete file schema (format/spec.md position deletes) */
   val DeleteSchema: StructType = StructType(Seq(
     org.apache.spark.sql.types.StructField("file_path",
@@ -1326,51 +1320,10 @@ final class GraftEqDeltaBatchWrite(table: GTable, branchPin: Option[String] = No
   // commit/abort are identical to the position-delta path: one RowDelta
   private val delegate = new GraftDeltaBatchWrite(table, branchPin, conflict, serializable)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = SparkSession.active
-    val eqIds = table.schema.identifierFieldIds.toSeq.sorted
-    val eqFields = eqIds.map(id => table.schema.fields.find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"identifier field $id not in schema")))
-    // identifier sub-schema WITH parquet field ids so full-schema
-    // field-id reads bind the key columns
-    val eqStruct = SparkTypes.toSparkStruct(graft.core.types.GStruct(eqFields))
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    GraftParquetCrypto.configure(conf, table.meta)
-    val job = Job.getInstance(conf)
-    val owf = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "snappy"), eqStruct)
-    // re-force after prepareWrite (it copies the session flag)
-    job.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val confMap = job.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    // UPDATE/MERGE also write replacement rows: a full-schema data
-    // writer with the same codec + roll-size handling the position-delta
-    // path uses (not a hardcoded codec); lineage columns materialize so
-    // replacements keep their _row_id
-    val writeSchema = StructType(SparkTypes.toSparkSchema(table.schema).fields ++
-      GraftSparkTable.lineageReadFields)
-    val gSchemaForFile = table.schema.copy(struct = graft.core.types.GStruct(
-      table.schema.fields ++ GraftSparkTable.lineageGFields))
-    val codec = Map("compression" -> spark.sessionState.conf
-      .getConfString("spark.sql.parquet.compression.codec", "snappy"))
-    val dataJob = Job.getInstance(conf)
-    table.meta.properties.get("write.target-file-rows")
-      .foreach(dataJob.getConfiguration.set("graft.write.target-file-rows", _))
-    val dataOwf = new ParquetFileFormat().prepareWrite(spark, dataJob, codec, writeSchema)
-    dataJob.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val dataConfMap = dataJob.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new GraftEqDeltaWriterFactory(table.location, eqStruct.json, confMap,
-      eqIds.toArray, MetaJson.writeSpec(table.spec).toString,
-      MetaJson.writeSchema(gSchemaForFile).toString, owf,
-      writeSchema.json, dataOwf, dataConfMap,
-      // eq deletes can't be DVs; only 'avro' switches the file format
-      if (table.meta.properties.get("write.delete.format").contains("avro")) "avro"
-      else "parquet")
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    new GraftEqDeltaWriterFactory(table.location, EqDeleteFiles.setup(table),
+      table.spec.specId, GraftDeltaWriter.partitionTypes(table),
+      GraftDeltaWriter.newRows(table))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     delegate.commit(messages)
@@ -1381,48 +1334,24 @@ final class GraftEqDeltaBatchWrite(table: GTable, branchPin: Option[String] = No
 
 final class GraftEqDeltaWriterFactory(
     location: String,
-    eqSchemaJson: String,
-    confMap: Map[String, String],
-    eqIds: Array[Int],
-    specJson: String,
-    gSchemaJson: String,
-    owf: OutputWriterFactory,
-    writeSchemaJson: String,
-    dataOwf: OutputWriterFactory,
-    dataConfMap: Map[String, String],
-    deleteFormat: String = "parquet") extends DeltaWriterFactory {
+    eqDeletes: EqDeleteSetup,
+    specId: Int,
+    partSparkTypes: Array[org.apache.spark.sql.types.DataType],
+    dataFactory: GraftWriterFactory) extends DeltaWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val eqSchema = org.apache.spark.sql.types.DataType.fromJson(eqSchemaJson)
-      .asInstanceOf[StructType]
-    val gSchema = MetaJson.readSchema(MetaJson.mapper.readTree(gSchemaJson))
-    val spec = MetaJson.readSpec(MetaJson.mapper.readTree(specJson))
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val writeSchema = org.apache.spark.sql.types.DataType.fromJson(writeSchemaJson)
-      .asInstanceOf[StructType]
-    val dataConf = new Configuration(false)
-    dataConfMap.foreach { case (k, v) => dataConf.set(k, v) }
-    val dataWriter = new GraftFanoutWriter(location, writeSchema, gSchema, spec,
-      dataOwf, dataConf, partitionId, taskId, lineage = true)
-    new GraftEqDeltaWriter(location, spec.specId,
-      spec.partitionType(gSchema).fields.map(f => SparkTypes.toSpark(f.tpe)).toArray,
-      eqSchema, eqIds, owf, conf, partitionId, taskId, dataWriter, deleteFormat)
-  }
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new GraftEqDeltaWriter(location, specId, partSparkTypes, eqDeletes, partitionId, taskId,
+      dataFactory.createWriter(partitionId, taskId))
 }
 
 final class GraftEqDeltaWriter(
     location: String,
     specId: Int,
     partSparkTypes: Array[org.apache.spark.sql.types.DataType],
-    eqSchema: StructType,
-    eqIds: Array[Int],
-    owf: OutputWriterFactory,
-    conf: Configuration,
+    eqDeletes: EqDeleteSetup,
     partitionId: Int,
     taskId: Long,
-    dataWriter: GraftFanoutWriter,
-    deleteFormat: String = "parquet") extends DeltaWriter[InternalRow] {
+    dataWriter: GraftFanoutWriter) extends DeltaWriter[InternalRow] {
 
   // distinct identifier tuples per (specId, referenced partition tuple):
   // a key deleted twice in one task writes once (equality deletes are
@@ -1438,8 +1367,8 @@ final class GraftEqDeltaWriter(
         case None    => (graft.core.meta.GlobalDeletes.SpecSentinel, Nil)
       }
     val partKey = (sid, raw.map { case b: Array[Byte] => b.toSeq; case x => x })
-    val key = eqSchema.fields.indices.map { i =>
-      SparkBridge.valueAt(id, i, eqSchema.fields(i).dataType) match {
+    val key = eqDeletes.eqSchema.fields.indices.map { i =>
+      SparkBridge.valueAt(id, i, eqDeletes.eqSchema.fields(i).dataType) match {
         case b: Array[Byte] => b.toSeq // value-hashable for the set
         case x              => x
       }
@@ -1463,8 +1392,7 @@ final class GraftEqDeltaWriter(
   override def commit(): WriterCommitMessage = {
     val dataMsg = dataWriter.commit().asInstanceOf[GraftCommitMessage]
     val files = deleted.toSeq.map { case ((sid, _), (partition, keys)) =>
-      EqDeleteFiles.write(location, eqSchema, eqIds, sid, partition,
-        keys, owf, conf, partitionId, taskId, deleteFormat)
+      EqDeleteFiles.write(location, eqDeletes, sid, partition, keys, partitionId, taskId)
     }
     GraftDeltaCommitMessage(dataMsg.files, files)
   }

@@ -2,8 +2,11 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into `private[sql]` column/expression conversions (Spark 4's
-  * classic Column API hides the catalyst constructor). */
+/** graft's one bridge into `private[sql]`: Spark 4 made the classic
+  * Column ⇄ Expression converters (`classic.ExpressionUtils`) private[sql],
+  * and this package-scoped forwarder lets graft build a `Column` over its
+  * own Catalyst expressions (codegen'd vector and text-hash ops) without
+  * a UDF. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

@@ -454,4 +454,32 @@ class MetaSpec extends AnyFunSuite {
     baseManifests.foreach(p => assert(GraftIO.exists(p), s"parent manifest deleted: $p"))
     assert(GraftIO.exists(ext), "externally appended file deleted by abort")
   }
+
+  test("staging abort deletes nothing when a live manifest list is unreadable") {
+    val cat = tempCatalog()
+    val t = cat.createTable(Seq("db"), "txf", schema)
+    // a live data file under the table's own data/ directory: the kind
+    // of file cleanup deletes when it appears only in a staged manifest
+    val live = s"${t.location}/data/live-1.parquet"
+    GraftIO.writeString(live, "live bytes")
+    t.newAppend().appendFile(dataFile(live, Nil, (1L, 10L))).commit()
+    val base = t.refresh()
+    val liveList = base.currentSnapshot.get.manifestListPath
+    val liveManifests = ManifestIO.readList(liveList).map(_.path)
+    // a staged append embeds the live manifest in its own manifest list
+    val staged = new StagedOps(t.ops, base)
+    val stagedFile = s"${t.location}/data/staged-1.parquet"
+    GraftIO.writeString(stagedFile, "staged bytes")
+    new GTable(staged).newAppend()
+      .appendFile(dataFile(stagedFile, Nil, (11L, 20L))).commit()
+    // the live manifest list becomes unreadable; ManifestIO's path-keyed
+    // list cache (cleared whole when full) would still serve it, so fill
+    // the cache past its bound to make the abort really read the file
+    GraftIO.writeString(liveList, "not a manifest list")
+    (0 to 256).foreach(i => ManifestIO.readList(ManifestIO.inlineList(Seq(s"evict-$i"))))
+    assert(!staged.cleanupStagedFiles(), "cleanup ran without its keep-set")
+    assert(GraftIO.exists(live), "abort deleted a data file the live table references")
+    liveManifests.foreach(p => assert(GraftIO.exists(p), s"abort deleted live manifest $p"))
+    assert(GraftIO.exists(stagedFile), "cleanup deleted staged files without its keep-set")
+  }
 }

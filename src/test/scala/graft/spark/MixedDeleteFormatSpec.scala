@@ -2,6 +2,8 @@ package graft.spark
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -148,5 +150,76 @@ class MixedDeleteFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected one delete file per format, got $fmts")
     assert(ids("gmd.db.mixed") == (0L until 24L).filter(_ % 4 == 3),
       "mixed-format deletes over one data file misapplied")
+  }
+
+  private def liveDataFiles(name: String): Set[DataFile] = {
+    val t = coreTable(name)
+    t.meta.currentSnapshot.toSeq.flatMap { sn =>
+      ManifestIO.readList(sn.manifestListPath).filter(_.content == 0)
+        .flatMap(mf => ManifestIO.readEntries(mf).filter(_.isLive).map(_.file))
+    }.toSet
+  }
+
+  /** (timestamp column's physical type + logical type, every chunk's codec) */
+  private def parquetFooter(path: String): (String, Set[String]) = {
+    val hPath = new org.apache.hadoop.fs.Path(
+      "file://" + graft.core.meta.GraftIO.toPath(path).toString)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hPath, conf))
+    try {
+      val ts = r.getFooter.getFileMetaData.getSchema
+        .getType(Array("ts"): _*).asPrimitiveType
+      val codecs = r.getFooter.getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      (s"${ts.getPrimitiveTypeName} ${ts.getLogicalTypeAnnotation}", codecs)
+    } finally r.close()
+  }
+
+  // Every row-level write path (copy-on-write, merge-on-read position
+  // deletes, equality deletes) writes its new rows through one data-file
+  // setup: table write properties and the int64-micros timestamp rule
+  // apply to UPDATE's replacement rows on all three alike.
+  private val rowLevelModes = Seq(
+    "cow" -> "'write.update.mode'='copy-on-write'",
+    "mor" -> "'write.update.mode'='merge-on-read'",
+    "eq" -> """'write.update.mode'='merge-on-read',
+               'write.update.equality-enabled'='true'""")
+
+  private def updatedFiles(name: String, props: String): Set[DataFile] = {
+    spark.sql(s"""CREATE TABLE gmd.db.$name (id BIGINT, ts TIMESTAMP, v STRING)
+      TBLPROPERTIES ($props)""")
+    spark.sql(s"ALTER TABLE gmd.db.$name SET IDENTIFIER FIELDS id")
+    spark.sql("""SELECT id, timestamp_micros(1700000000000000 + id) AS ts,
+      concat('v', string(id)) AS v FROM range(0, 20)""")
+      .coalesce(1).writeTo(s"gmd.db.$name").append()
+    val before = liveDataFiles(name)
+    spark.sql(s"UPDATE gmd.db.$name SET v = concat(v, '+') WHERE id % 4 = 0")
+    val rows = spark.sql(s"SELECT id, v FROM gmd.db.$name ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows == (0L until 20L).map(i => (i, if (i % 4 == 0) s"v$i+" else s"v$i")),
+      s"$name: UPDATE misapplied: $rows")
+    val added = liveDataFiles(name) -- before
+    assert(added.nonEmpty, s"$name: UPDATE wrote no data files")
+    added
+  }
+
+  test("row-level UPDATE replacement rows follow the table's data-file setup") {
+    rowLevelModes.foreach { case (mode, modeProps) =>
+      val added = updatedFiles(s"upd_pq_$mode",
+        s"$modeProps, 'write.parquet.compression-codec'='zstd'")
+      added.foreach { f =>
+        assert(f.format == "parquet", s"$mode: ${f.path}")
+        val (ts, codecs) = parquetFooter(f.path)
+        assert(ts == "INT64 TIMESTAMP(MICROS,true)", s"$mode: ts written as $ts")
+        assert(codecs == Set("ZSTD"), s"$mode: chunks compressed with $codecs")
+      }
+    }
+    rowLevelModes.foreach { case (mode, modeProps) =>
+      val added = updatedFiles(s"upd_orc_$mode",
+        s"$modeProps, 'write.format.default'='orc'")
+      assert(added.forall(f => f.format == "orc" && f.path.endsWith(".orc")),
+        s"$mode: replacement rows not written as ORC: ${added.map(_.path)}")
+    }
   }
 }
